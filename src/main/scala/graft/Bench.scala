@@ -37,6 +37,27 @@ object Bench {
   private def fmt3(x: Double): String =
     String.format(java.util.Locale.ROOT, "%.3f", Double.box(x))
 
+  /** A failed query's exception class and the first line of its message,
+    * for the `[bench]` line and the status record.
+    */
+  def failureNote(e: Throwable): String =
+    e.getClass.getName + Option(e.getMessage).flatMap(_.linesIterator.nextOption())
+      .fold("")(": " + _)
+
+  /** JSON string literal: backslash, quote and ALL control chars (< 0x20)
+    * escaped — a tab or CR in an error message or in oracle SQL text would
+    * otherwise make a JSON reader fail.
+    */
+  def jsonString(s: String): String = "\"" + s.flatMap {
+    case '"'  => "\\\""
+    case '\\' => "\\\\"
+    case '\n' => "\\n"
+    case '\r' => "\\r"
+    case '\t' => "\\t"
+    case c if c < ' ' => f"\\u${c.toInt}%04x"
+    case c => c.toString
+  } + "\""
+
   /** The bench gate's noise model, kept in lockstep with
     * tools/bench_diff.py (THRESHOLD / MIN_SECONDS / MIN_DELTA_SECONDS):
     * a query regresses when cur/prev ≥ 1.5 AND cur ≥ 0.15 s AND
@@ -172,8 +193,9 @@ object Bench {
       }
       watchdog.schedule(cancel, queryTimeoutSec * 1000)
       val qt0 = System.nanoTime()
-      val ok = try { fn(spark, sfDir).count(); true }
-               catch { case _: Throwable => false }
+      val failure = try { fn(spark, sfDir).count(); None }
+                    catch { case e: Throwable => Some(failureNote(e)) }
+      val ok = failure.isEmpty
       val dt = (System.nanoTime() - qt0) / 1e9
       cancel.cancel()
       spark.sparkContext.clearJobGroup()
@@ -184,8 +206,10 @@ object Bench {
       spark.catalog.clearCache()
       spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(false))
       if (ok) best.update(name, math.min(dt, best.getOrElse(name, Double.MaxValue)))
-      System.err.println(f"[bench] pass=$pass $name%-28s ${dt}%8.2fs ok=$ok elapsed=${elapsed}%.0fs")
-      appendStatus(s"""{"query":"$name","pass":$pass,"sec":${fmt3(dt)},"ok":$ok}""")
+      System.err.println(f"[bench] pass=$pass $name%-28s ${dt}%8.2fs ok=$ok elapsed=${elapsed}%.0fs" +
+        failure.fold("")(" error=" + _))
+      appendStatus(s"""{"query":"$name","pass":$pass,"sec":${fmt3(dt)},"ok":$ok""" +
+        failure.fold("")(f => s""","error":${jsonString(f)}""") + "}")
     }
 
     def onePass(pass: Int): Unit =

@@ -1,6 +1,7 @@
 package graft
 import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths, StandardOpenOption}
+import Bench.jsonString
 
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare.
@@ -31,23 +32,10 @@ object Verify {
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
 
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
-
     // Oracle SQL first: a stall in any later query must not cost the round the
     // whole oracle map (round 4 failure mode: rc=124 → empty correctness file).
     val json = SparkEntry.oracleSql
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
+      .map { case (k, v) => s"${jsonString(k)}: ${jsonString(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
 
     val statusPath = Paths.get(s"$outDir/_verify_status.jsonl")
@@ -74,7 +62,7 @@ object Verify {
     }
     selected.foreach { case (name, fn) =>
       if (budgetSec.exists(elapsed > _)) {
-        status(s"""{"q":${q(name)},"status":"skipped_budget"}""")
+        status(s"""{"q":${jsonString(name)},"status":"skipped_budget"}""")
       } else {
         spark.sparkContext.setJobGroup(name, name, interruptOnCancel = true)
         val cancel = new java.util.TimerTask {
@@ -86,9 +74,9 @@ object Verify {
           fn(spark, sfDir).coalesce(1).write.mode("overwrite")
             .parquet(s"$outDir/$name")
           val sec = (System.nanoTime() - qt0) / 1e9
-          status(f"""{"q":${q(name)},"status":"ok","sec":$sec%.2f}""")
+          status(f"""{"q":${jsonString(name)},"status":"ok","sec":$sec%.2f}""")
         } catch { case e: Throwable =>
-          status(s"""{"q":${q(name)},"status":"fail","err":${q(e.toString.take(300))}}""")
+          status(s"""{"q":${jsonString(name)},"status":"fail","err":${jsonString(e.toString.take(300))}}""")
         } finally {
           cancel.cancel()
           spark.sparkContext.clearJobGroup()

@@ -1,6 +1,10 @@
 package graft.core
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import java.util.concurrent.ConcurrentHashMap
+
+import org.apache.hadoop.fs.{FileStatus, Path}
+import org.apache.spark.sql.{DataFrame, GraftBridge, SparkSession}
+import org.apache.spark.sql.types.StructType
 
 /** Session entry point (≅ the reference's `RasgoQL` object, rasgoql/main.py:
   * 15-144): bind datasets, run raw SQL with the same destructive-keyword
@@ -94,10 +98,11 @@ final class GraftSession(val spark: SparkSession) {
   }
 
   /** Bind a chain to a parquet path; registers a view so the SQL render face
-    * has a referenceable name.
+    * has a referenceable name. Runs no Spark job once the path's schema is
+    * known to the session (see [[GraftSession.readParquet]]).
     */
   def datasetFromParquet(path: String, name: String): Chain = {
-    val df = spark.read.parquet(path)
+    val df = GraftSession.readParquet(spark, path)
     df.createOrReplaceTempView(name)
     Chain(spark, name, df)
   }
@@ -227,4 +232,64 @@ object GraftSession {
   }
 
   def apply(spark: SparkSession): GraftSession = new GraftSession(spark)
+
+  /** What a Parquet schema inferred from `path` depends on: the leaf
+    * files Spark would read, as sorted (path, length, modification time),
+    * and every set conf that steers Parquet schema conversion.
+    */
+  private final case class ParquetVersion(files: Seq[(String, Long, Long)],
+                                          conf: Seq[(String, String)])
+
+  /** Per session (weakly held: a dropped session takes its entries with
+    * it), per path: the latest version inferred and its schema.
+    */
+  private val parquetSchemas =
+    new java.util.WeakHashMap[SparkSession, ConcurrentHashMap[String, (ParquetVersion, StructType)]]()
+
+  /** `spark.read.parquet(path)` that infers the schema once per file
+    * version. Spark's Parquet inference runs a Spark job on every read,
+    * even of one file; here a repeated read of an unchanged source reuses
+    * the schema through `spark.read.schema(...)` and runs no job, so
+    * building a chain over it stays job-free. A new, removed or rewritten
+    * leaf file, or a changed `spark.sql.parquet.*`,
+    * `spark.sql.legacy.parquet.*` or `spark.sql.caseSensitive` conf,
+    * infers again. Listing the leaf files is driver-side metadata work.
+    */
+  def readParquet(spark: SparkSession, path: String): DataFrame = {
+    val version = ParquetVersion(leafFiles(spark, path),
+      spark.conf.getAll.filter { case (k, _) =>
+        k.startsWith("spark.sql.parquet.") || k.startsWith("spark.sql.legacy.parquet.") ||
+          k == "spark.sql.caseSensitive"
+      }.toSeq.sorted)
+    // nothing listed (a missing path, or a file system this listing
+    // can't see): let Spark read, and fail, as it would
+    if (version.files.isEmpty) spark.read.parquet(path)
+    else {
+      val schemas = parquetSchemas.synchronized {
+        parquetSchemas.computeIfAbsent(spark,
+          _ => new ConcurrentHashMap[String, (ParquetVersion, StructType)]())
+      }
+      val schema = Option(schemas.get(path)).collect { case (v, s) if v == version => s }
+        .getOrElse {
+          val s = spark.read.parquet(path).schema
+          schemas.put(path, (version, s))
+          s
+        }
+      spark.read.schema(schema).parquet(path)
+    }
+  }
+
+  /** The files under `path` (a file, directory or glob) that Spark's file
+    * index would list, skipping hidden names the same way.
+    */
+  private def leafFiles(spark: SparkSession, path: String): Seq[(String, Long, Long)] = {
+    val root = new Path(path)
+    val fs = root.getFileSystem(GraftBridge.hadoopConf(spark))
+    def walk(st: FileStatus): Seq[FileStatus] =
+      if (!st.isDirectory) Seq(st)
+      else fs.listStatus(st.getPath).toSeq
+        .filterNot(c => GraftBridge.hiddenPathName(c.getPath.getName)).flatMap(walk)
+    Option(fs.globStatus(root)).toSeq.flatten.flatMap(walk)
+      .map(st => (st.getPath.toString, st.getLen, st.getModificationTime)).sorted
+  }
 }

@@ -1,7 +1,7 @@
 package graft.ops
 
 import graft.core.{Chain, Exact, Naming}
-import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.{Column, DataFrame, GraftBridge, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -480,34 +480,47 @@ final class AggOps(private val c: Chain) extends AnyVal {
       s"SELECT ${(groupBy ++ aggSql).mkString(", ")} FROM {{source}}$grpSql"))
   }
 
-  /** describe(): per-column profile, one output row per input column
-    * (reference output frame at tutorials/tutorial.ipynb:3714-3745: FEATURE,
-    * DTYPE, counts, MOST_FREQUENT, MEAN, STD_DEV, …).
+  /** describe(): per-column profile, one output row per input column, in
+    * column order (reference output frame at tutorials/tutorial.ipynb:
+    * 3714-3745: FEATURE, DTYPE, counts, MOST_FREQUENT, MEAN, STD_DEV, …).
     *
-    * Runs one full-table aggregate for the numeric stats plus one small
-    * groupBy-per-column job for the deterministic mode (ties broken by
-    * smallest value). Output size is O(n_columns) — driver assembly is
-    * bounded and declared.
+    * One lazy plan; building it runs no Spark job. Two branches scan the
+    * input once each:
+    *   - a one-row aggregate of the numeric/order stats and the row count,
+    *     unpivoted to one row per column (with its ordinal);
+    *   - a stacked (feature, value) profile: null and unique counts and
+    *     the deterministic mode (ties broken by smallest value).
+    * The profile (O(n_columns) rows) is broadcast and left-joined on
+    * feature, and the result is coalesced to one partition and sorted
+    * within it by the ordinal. A zero-row input yields 0 for the counts
+    * and null for every other stat, as the SQL face does. Every output
+    * column is nullable.
     */
   def describeTable(): Chain = {
-    val spark = c.spark
     val fields = c.df.schema.fields.toSeq
     // one wide agg for the numeric/order stats. Deliberately NO
     // countDistinct here: n distinct-aggregates make Catalyst expand the
     // input n+1×, which dominated this operator's cost — distinct counts
     // come out of the stacked pass below instead.
-    val statCols = fields.flatMap { f =>
+    val statCols = fields.zipWithIndex.flatMap { case (f, i) =>
       val cc = col(f.name)
       val numeric = f.dataType.isInstanceOf[NumericType]
       Seq(
-        (if (numeric) Exact.avg(cc.cast("double")) else lit(null).cast("double")).as(s"mean_${f.name}"),
-        (if (numeric) Exact.stddev(cc.cast("double")) else lit(null).cast("double")).as(s"std_${f.name}"),
-        min(cc).cast("string").as(s"min_${f.name}"),
-        max(cc).cast("string").as(s"max_${f.name}"))
+        (if (numeric) Exact.avg(cc.cast("double")) else lit(null).cast("double")).as(s"_mean$i"),
+        (if (numeric) Exact.stddev(cc.cast("double")) else lit(null).cast("double")).as(s"_std$i"),
+        min(cc).cast("string").as(s"_min$i"),
+        max(cc).cast("string").as(s"_max$i"))
     } :+ count(lit(1)).as("_total")
-    val stats = c.df.agg(statCols.head, statCols.tail: _*).collect()(0)
+    val perColumn = fields.zipWithIndex.map { case (f, i) =>
+      struct(lit(i).as("_ord"), lit(f.name).as("feature"),
+        lit(f.dataType.simpleString).as("dtype"),
+        col(s"_mean$i").as("mean"), col(s"_std$i").as("std_dev"),
+        col(s"_min$i").as("min_value"), col(s"_max$i").as("max_value"))
+    }
+    val stats = c.df.agg(statCols.head, statCols.tail: _*)
+      .select(col("_total"), inline(array(perColumn: _*)))
     // row/null/unique counts + deterministic mode (ties → smallest value)
-    // in ONE job: stack all columns to (feature, value) rows, count, then
+    // in ONE pass: stack all columns to (feature, value) rows, count, then
     // rank-and-aggregate per feature — column count never multiplies scans
     // or jobs. (String-cast distinct equals native distinct for these
     // types; Spark's value→string rendering is injective.)
@@ -515,37 +528,26 @@ final class AggOps(private val c: Chain) extends AnyVal {
       fields.map(f => s"'${f.name}', CAST(${f.name} AS STRING)").mkString(", ") + ")"
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(col("feature")).orderBy(col("count").desc, col("v").asc_nulls_last)
-    val profile: Map[String, (Long, Long, String)] = c.df
+    val profile = c.df
       .select(expr(stackExpr).as(Seq("feature", "v")))
       .groupBy(col("feature"), col("v")).count()
       .withColumn("_rn", row_number().over(w))
       .groupBy(col("feature"))
       .agg(
-        sum(when(col("v").isNull, col("count")).otherwise(lit(0L))).as("nulls"),
-        count(when(col("v").isNotNull, lit(1))).as("uniq"),
-        max(when(col("_rn") === 1, col("v"))).as("mode"))
-      .collect().map(r =>
-        r.getString(0) -> (r.getLong(1), r.getLong(2), r.getString(3))).toMap
-    val total = stats.getAs[Long]("_total")
-    val rows = fields.map { f =>
-      val (nulls, uniq, mode) = profile(f.name)
-      Row(f.name, f.dataType.simpleString, total,
-        nulls, uniq, mode,
-        if (stats.isNullAt(stats.fieldIndex(s"mean_${f.name}"))) null
-        else stats.getAs[Double](s"mean_${f.name}"),
-        if (stats.isNullAt(stats.fieldIndex(s"std_${f.name}"))) null
-        else stats.getAs[Double](s"std_${f.name}"),
-        stats.getAs[String](s"min_${f.name}"),
-        stats.getAs[String](s"max_${f.name}"))
-    }
-    val schema = StructType(Seq(
-      StructField("feature", StringType), StructField("dtype", StringType),
-      StructField("row_count", LongType), StructField("null_count", LongType),
-      StructField("unique_count", LongType), StructField("most_frequent", StringType),
-      StructField("mean", DoubleType), StructField("std_dev", DoubleType),
-      StructField("min_value", StringType), StructField("max_value", StringType)))
-    val df2 = spark.createDataFrame(
-      spark.sparkContext.parallelize(rows, 1), schema)
+        sum(when(col("v").isNull, col("count")).otherwise(lit(0L))).as("_nulls"),
+        count(when(col("v").isNotNull, lit(1))).as("_uniq"),
+        max(when(col("_rn") === 1, col("v"))).as("_mode"))
+    def out(cc: Column, name: String) = GraftBridge.nullable(cc).as(name)
+    val df2 = stats.join(broadcast(profile), Seq("feature"), "left")
+      .coalesce(1).sortWithinPartitions("_ord")
+      .select(
+        out(col("feature"), "feature"), out(col("dtype"), "dtype"),
+        out(col("_total"), "row_count"),
+        out(coalesce(col("_nulls"), lit(0L)), "null_count"),
+        out(coalesce(col("_uniq"), lit(0L)), "unique_count"),
+        out(col("_mode"), "most_frequent"),
+        out(col("mean"), "mean"), out(col("std_dev"), "std_dev"),
+        out(col("min_value"), "min_value"), out(col("max_value"), "max_value"))
     // SQL face: per-column UNION ALL of stat SELECTs over {{source}} —
     // Spark-executable text of the same profile (deterministic-float mean/
     // stddev spelled out through the decimal accumulation, mode via an

@@ -12,6 +12,26 @@ object GraftBridge {
   def column(e: Expression): Column = classic.ExpressionUtils.column(e)
   def expression(c: Column): Expression = classic.ExpressionUtils.expression(c)
 
+  /** `c`, declared nullable whatever Catalyst derives for it (the
+    * `KnownNullable` tag) — for frames whose contract schema is
+    * all-nullable, as a `createDataFrame` with default StructFields is.
+    */
+  def nullable(c: Column): Column =
+    column(org.apache.spark.sql.catalyst.expressions.KnownNullable(expression(c)))
+
+  /** The Hadoop configuration the session's file readers use
+    * (`sessionState` is `private[sql]`).
+    */
+  def hadoopConf(spark: SparkSession): org.apache.hadoop.conf.Configuration =
+    spark.asInstanceOf[classic.SparkSession].sessionState.newHadoopConf()
+
+  /** Whether Spark's file listing skips a file or directory of this name
+    * (`_`- and `.`-prefixed names other than Parquet summary files, and
+    * in-flight `._COPYING_` copies; `HadoopFSUtils` is `private[spark]`).
+    */
+  def hiddenPathName(name: String): Boolean =
+    org.apache.spark.util.HadoopFSUtils.shouldFilterOutPathName(name)
+
   /** The session's `spark.sql.autoBroadcastJoinThreshold` in bytes (≤ 0 =
     * broadcast disabled) — `sessionState` is `private[sql]`; size-gated
     * broadcast hints need the same number the planner uses.

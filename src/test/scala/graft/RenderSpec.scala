@@ -38,6 +38,13 @@ class RenderSpec extends AnyFunSuite {
     // and the face composes mid-chain like any other fragment
     val c2 = table("orders").filterRows(Seq("o_totalprice > 200000")).describeTable()
     assert(rows(spark.sql(c2.sql())) == rows(c2.df))
+    // a zero-row input: counts 0, every other stat null, on both faces
+    val c3 = table("orders").filterRows(Seq("1 = 0")).describeTable()
+    assert(rows(spark.sql(c3.sql())) == rows(c3.df))
+    val empty = c3.df.collect()
+    assert(empty.map(_.getString(0)).toSeq == table("orders").df.columns.toSeq)
+    assert(empty.forall(r => (2 to 4).forall(r.getLong(_) == 0L) &&
+      (5 to 9).forall(r.isNullAt)))
   }
 
   test("approx/sketch aggregates render Spark-executable SQL faces") {

@@ -469,6 +469,15 @@ class Round12Spec extends AnyFunSuite {
       "summary-line parse: per-query seconds only, skipped names ignored")
   }
 
+  test("bench failure note: exception class and first message line, JSON-safe") {
+    import graft.Bench.{failureNote, jsonString}
+    val note = failureNote(new IllegalStateException("bad \"plan\"\n  at stage 2"))
+    assert(note == "java.lang.IllegalStateException: bad \"plan\"")
+    assert(failureNote(new NullPointerException()) == "java.lang.NullPointerException")
+    assert(jsonString(note) == "\"java.lang.IllegalStateException: bad \\\"plan\\\"\"")
+    assert(jsonString("a\tb\u0001") == "\"a\\tb\\u0001\"")
+  }
+
   // ---- reserved-name guards (ADVICE, low) ----------------------------------
 
   test("reserved-name guards: grouped/windowed ops refuse colliding key columns") {
